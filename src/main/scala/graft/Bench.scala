@@ -1,11 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  // Load sentinel (r9): four rounds of committed artifacts were inflated
-  // by co-tenant load the min-of-N couldn't fully shed. Record the host
-  // 1-minute loadavg and mark the artifact "loaded" when the PRE-RUN
-  // reading exceeds cores/4 — a flagged artifact means "re-run quiet
-  // before reading regressions off these walls".
+  // Load sentinel: co-tenant load inflates walls beyond what min-of-N
+  // sheds, so the host 1-minute loadavg is recorded and a run whose
+  // pre-run reading exceeds cores/4 is stamped "loaded" (re-run quiet).
   private def loadavg1m(): Double =
     try new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
@@ -13,17 +11,11 @@ object Bench {
     catch { case _: Throwable => -1.0 }
 
   def main(args: Array[String]): Unit = {
-    // FIRST thing in main: the pre-run loadavg must be read before the
-    // session, table warmup, and index prebuild generate their own load —
-    // read any later and the sentinel measures the bench itself.
-    // ACTIVE load gate (r16): a loaded artifact of record cost r15 a
-    // git-archaeology adjudication (phantom 6-8x regressions on untouched
-    // code). When the box is busy at startup, WAIT for it to quiet —
-    // re-reading every 15 s up to SPARK_GRAFT_LOAD_WAIT seconds (default
-    // 120, 0 disables) — and only then start the sweep; if the window
-    // expires still-loaded, proceed but warn on stderr and stamp the
-    // artifact loaded:true (+ load_waited_s) so no reader ever has to
-    // reconstruct machine state from git history again.
+    // Read the load FIRST, before the session and prebuilds add their own.
+    // A busy box is waited out, re-reading every 15 s for up to
+    // SPARK_GRAFT_LOAD_WAIT seconds (default 120, 0 disables); if it stays
+    // loaded the sweep proceeds with a stderr warning, and the output
+    // carries loaded:true and load_waited_s.
     val hostCores = Runtime.getRuntime.availableProcessors()
     val loadGate = hostCores / 4.0
     val waitBudgetS = sys.env.getOrElse("SPARK_GRAFT_LOAD_WAIT", "120").toInt
@@ -40,103 +32,41 @@ object Bench {
       System.err.println(s"[bench] proceeding LOADED after ${waitedS}s wait " +
         s"(load_1m=$loadBefore); artifact will carry loaded:true")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // size-first AQE coalescing — same two settings (and rationale) as
-      // GraftSession: partition counts derive from bytes, not from the
-      // core count, so the 8-core and 32-core runs execute comparable
-      // plans and per-task overhead stops scaling with parallelism
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256m")
-      // sort-based shuffle writer (see GraftSession: the bypass-merge
-      // writer's M×R per-map-task file creation was the residual
-      // per-query tax that scaled with SPARK_GRAFT_CPUS)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCores()
+    val spark = GraftSession.get(cpus)
     // Warm the JVM/codegen/file-listing paths so the first timed query isn't
     // charged for session startup; touch every table once.
     graft.Tables.all.foreach { t =>
       try graft.Tables.load(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warm-up of table $t FAILED: ${e.getMessage}")
+      }
     }
     // optional comma-separated subset (quiet A-B reruns of a few queries
-    // without paying the full 120-query sweep). Read BEFORE the prebuilds:
-    // a subset run with no consumer of an index/label artifact must not
-    // pay its derivation nor emit an unrelated *_build line item
-    // (Verify gates its prebuild the same way).
+    // without paying the full sweep). Read BEFORE the prebuilds: a subset
+    // run with no consumer of an artifact must not pay its derivation nor
+    // emit an unrelated *_build line item.
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    def anyPicked(consumers: Set[String]): Boolean =
-      only.forall(_.exists(consumers))
-    // Index construction is an offline step (a cell-partitioned table at
-    // cluster scale); prebuild it so d_ann_ivf times the probe, not the
-    // build — but report the build as its own timed line item so the total
-    // still reflects ALL work performed.
-    // consumer sets live NEXT TO the artifact accessors (single source of
-    // truth — a new consumer registered without updating them would pay
-    // the build inside its timed run under SPARK_GRAFT_ONLY)
-    val ivfConsumers = graft.queries.AnnQueries.ivfConsumers
-    val buildSec: Option[Double] = if (!anyPicked(ivfConsumers)) None else {
-      val tBuild0 = System.nanoTime()
-      try {
-        val idx = graft.queries.AnnQueries.ivfIndex(spark, sfDir)
-        idx.indexed.count() // materialize the persisted cell assignment
-        // the margin-fixture index the oracle-checked d_ann_ivf probes
-        val idxP = graft.queries.AnnQueries.ivfIndexPlanted(spark, sfDir)
-        idxP.indexed.count()
-      } catch { case _: Throwable => () }
-      Some((System.nanoTime() - tBuild0) / 1e9)
-    }
-    // Same offline/online split for the PQ codebooks: train once here,
-    // reported as its own line item, so d_ann_pq times encode+probe.
-    val pqConsumers = graft.queries.AnnQueries.pqConsumers
-    val pqBuildSec: Option[Double] = if (!anyPicked(pqConsumers)) None else {
-      val tPq0 = System.nanoTime()
-      try graft.queries.AnnQueries.pqBooks(spark, sfDir)
-      catch { case _: Throwable => () }
-      Some((System.nanoTime() - tPq0) / 1e9)
-    }
-    // And for the dedup-apply family's shared cluster labels (r11): the CC
-    // loop derives once, its consumers (d_dedup_cluster / apply /
-    // keep_best) time what a pipeline times — label CONSUMPTION. Reported
-    // as its own line item below so the total still carries the build.
-    val labelConsumers = graft.queries.DocumentQueries.labelConsumers
-    val ccBuildSec: Option[Double] = if (!anyPicked(labelConsumers)) None else {
-      val tCc0 = System.nanoTime()
-      try graft.queries.DocumentQueries.clusterLabels(spark, sfDir).count()
-      catch { case _: Throwable => () }
-      Some((System.nanoTime() - tCc0) / 1e9)
-    }
-    // s_hybrid_serve's staged lexical rank list is an offline artifact like
-    // the IVF index (built once per JVM, cachedArtifact) — r16 verdict: its
-    // build cost was invisible to min-of-3. Same split: prebuild here,
-    // report as its own line item so the total still carries ALL work.
-    val hybridConsumers = graft.queries.RetrievalQueries.hybridServeConsumers
-    val hybridBuildSec: Option[Double] = if (!anyPicked(hybridConsumers)) None else {
-      val tHl0 = System.nanoTime()
-      try graft.queries.RetrievalQueries.hybridServePrebuild(spark, sfDir)
-      catch { case _: Throwable => () }
-      Some((System.nanoTime() - tHl0) / 1e9)
-    }
-    // Several operators (connected components, vancode, the embedding
-    // index) pin localCheckpoint blocks that outlive their query; across
-    // 80 queries × (warmup + timed) the leaked blocks grow old-gen
-    // occupancy until GC pauses tax EVERY subsequent job (~+25% uniform
-    // drift measured at 8g). Reclaim non-index blocks after each query so
-    // each measurement starts from the same heap state.
-    val protectedRdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    def reclaimBlocks(): Unit =
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => protectedRdds(id) }
-        .values.foreach(_.unpersist(blocking = false))
+    val failed = scala.collection.mutable.ListBuffer.empty[String]
+    // Shared artifacts are offline steps: prebuild them so consumers time
+    // the probe, not the build, and report each build as its own line item
+    // so the total still carries ALL work. A failed build is listed failed.
+    val builds = SparkEntry.artifacts
+      .filter(a => only.forall(_.exists(a.consumers)))
+      .flatMap { a =>
+        val item = s"${a.name}_build"
+        try Some(item -> (a.prebuild(spark, sfDir), Double.NaN, Double.NaN))
+        catch { case e: Throwable =>
+          failed += item
+          System.err.println(s"[bench] $item FAILED: ${e.getMessage}")
+          None
+        }
+      }
+    // Operators (connected components, vancode) pin blocks that outlive
+    // their query; leaked across the sweep their GC pauses tax every later
+    // job (~+25% measured at 8g). Release what no artifact pins.
+    def reclaimBlocks(): Unit = Artifact.releaseUnowned(spark)
     // JMH-style warmup: run every query once untimed so the timed loop
     // measures steady-state execution, not whichever alphabetically-first
     // queries happen to absorb JIT/codegen warmup (disable with
@@ -150,23 +80,14 @@ object Bench {
       }
       System.gc()
     }
-    // Load robustness: the machine hosting the driver's snapshot runs other
-    // work, and two rounds of artifacts were corrupted by CPU contention
-    // (uniform-ish 1.6x inflation with a 3-10x scheduling-sensitive tail).
-    // Two countermeasures, both recorded per query:
-    //  - min-of-N wall time (N=SPARK_GRAFT_REPS, default 3): contention is
-    //    bursty, so the min of two spaced runs sheds most of the tail;
-    //  - process-CPU seconds (all JVM threads, via the platform
-    //    OperatingSystemMXBean): the work a query does is ~invariant under
-    //    external load, so cpu_s is the metric to trust when wall times
-    //    disagree across artifacts.
+    // Against CPU contention, per query: the min wall of N runs
+    // (N=SPARK_GRAFT_REPS, default 3; contention is bursty), and the
+    // process-CPU seconds of all JVM threads, which external load barely
+    // moves — trust cpu_s when walls disagree across runs.
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    // per-query GC time (r17, the r16 adjudication lesson): a run whose
-    // walls blow up needs to show WHERE the time went — a uniform GC tax
-    // (heap pressure from pinned artifacts) reads completely differently
-    // from scheduling contention (GC flat, walls inflated). Sum across all
-    // collector beans; deltas are attributed to the rep that ran.
+    // per-query GC seconds (summed over collectors) tell a GC tax from heap
+    // pressure apart from scheduling contention (GC flat, walls inflated)
     val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
     def gcMillis(): Long = {
       var t = 0L
@@ -175,7 +96,6 @@ object Bench {
       t
     }
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
-    val failed = scala.collection.mutable.ListBuffer.empty[String]
     def timeOnce(name: String,
                  fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double, Double) = {
       val g0 = gcMillis()
@@ -205,11 +125,7 @@ object Bench {
       // min wall; CPU and GC from the min-wall run (the least-contended
       // sample)
       name -> runs.minBy(_._1)
-    }.toMap ++
-      buildSec.map(s => "d_ann_ivf_build" -> (s, Double.NaN, Double.NaN)) ++
-      pqBuildSec.map(s => "d_ann_pq_build" -> (s, Double.NaN, Double.NaN)) ++
-      ccBuildSec.map(s => "d_cluster_labels_build" -> (s, Double.NaN, Double.NaN)) ++
-      hybridBuildSec.map(s => "s_hybrid_serve_build" -> (s, Double.NaN, Double.NaN))
+    }.toMap ++ builds
     val results = timed.map { case (k, (w, _, _)) => k -> w }
     val cpuResults = timed.collect { case (k, (_, c, _)) if !c.isNaN => k -> c }
     val gcResults = timed.collect { case (k, (_, _, g)) if !g.isNaN => k -> g }
@@ -220,6 +136,10 @@ object Bench {
     // few queries — so it always parses.
     def f(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val total = if (results.nonEmpty) results.values.sum else 0.0
+    // the builds' share is reported apart, so the queries' total compares
+    // across changes to the set of declared artifacts
+    val buildTotal = builds.map(_._2._1).sum
+    val totalsJson = s""""query_total_s":${f(total - buildTotal)},"build_total_s":${f(buildTotal)}"""
     val sorted = results.values.toSeq.sorted
     val median = if (sorted.isEmpty) 0.0 else sorted(sorted.size / 2)
     val cpuTotal = if (cpuResults.nonEmpty) cpuResults.values.sum else 0.0
@@ -252,14 +172,14 @@ object Bench {
     val fullPath = java.nio.file.Paths.get(
       if (only.isEmpty) "bench_full.json" else "bench_subset.json")
     java.nio.file.Files.write(fullPath,
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","reps":$reps,"cpu_total_s":${f(cpuTotal)},$loadJson,"queries":$fullJson,"cpu":${jmap(cpuResults)},"gc":${jmap(gcResults)},"rep_walls":$repsJson,"sf":"$sfDir"}""".getBytes("UTF-8"))
+      s"""{"metric":"total","value":${f(total)},"unit":"sec",$totalsJson,"reps":$reps,"cpu_total_s":${f(cpuTotal)},$loadJson,"queries":$fullJson,"cpu":${jmap(cpuResults)},"gc":${jmap(gcResults)},"rep_walls":$repsJson,"sf":"$sfDir"}""".getBytes("UTF-8"))
     val slowest = results.toSeq.sortBy(-_._2).take(5)
       .map { case (k, v) => "\"" + k + "\":" + f(v) }
       .mkString("{", ",", "}")
     val failedJson =
       if (failed.isEmpty) ""
       else s""","failed":[${failed.distinct.map(n => s"\"$n\"").mkString(",")}]"""
-    println(s"""{"metric":"total","value":${f(total)},"unit":"sec","n_queries":${results.size},"reps":$reps,"cpu_total_s":${f(cpuTotal)},"median_s":${f(median)},"max_s":${f(sorted.lastOption.getOrElse(0.0))},$loadJson,"queries":$slowest$failedJson,"full":"${fullPath.toAbsolutePath}","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${f(total)},"unit":"sec",$totalsJson,"n_queries":${results.size},"reps":$reps,"cpu_total_s":${f(cpuTotal)},"median_s":${f(median)},"max_s":${f(sorted.lastOption.getOrElse(0.0))},$loadJson,"queries":$slowest$failedJson,"full":"${fullPath.toAbsolutePath}","sf":"$sfDir"}""")
     spark.stop()
   }
 }

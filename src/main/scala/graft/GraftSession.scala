@@ -54,6 +54,16 @@ object GraftSession {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
 
+  /** The core count the mains run at: `SPARK_GRAFT_CPUS`, else `default`;
+    * any value but a positive integer fails at once. */
+  def envCores(default: Int = 4, env: Map[String, String] = sys.env): Int =
+    env.get("SPARK_GRAFT_CPUS").fold(default) { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
+
+  /** The session every graft main runs on: the settings above plus the SQL
+    * functions and the top-k rewrite, both registered idempotently. */
   def get(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = builder(cores).getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -17,6 +17,10 @@ object SparkEntry {
       MiscQueries.defs ++ SourceQueries.defs ++ AnalyticsQueries.defs ++
       CurationQueries.defs ++ RetrievalQueries.defs
 
+  /** Every shared artifact the registry's queries declare (initializing
+    * the registry first, which registers the declarations). */
+  def artifacts: Seq[Artifact[_]] = { registry; Artifact.declared }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,41 +8,16 @@ object Verify {
     // optional 3rd arg: comma-separated query names — verify just those
     // (fast single-query iteration; the driver always runs all)
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // size-first AQE coalescing, same settings as GraftSession/Bench so
-      // the verified plans are the benched plans
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256m")
-      // sort-based shuffle writer, same setting (and rationale) as
-      // GraftSession/Bench
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get(GraftSession.envCores())
     new java.io.File(outDir).mkdirs()
-    // Prebuild the SHARED artifacts (the dedup family's cluster labels,
-    // like Bench prebuilds the ANN indexes) BEFORE the protected-RDD
-    // snapshot: the labels are localCheckpoint-backed and shared by three
-    // queries, and the per-query reclaim below would otherwise evict
-    // their blocks after the first consumer — the remaining two then die
-    // with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (caught by this round's
-    // gate, not hypothetical).
-    val labelConsumers = graft.queries.DocumentQueries.labelConsumers
-    if (only.forall(o => o.exists(labelConsumers)))
-      try graft.queries.DocumentQueries.clusterLabels(spark, sfDir).count()
+    // prebuild the shared artifacts the picked queries consume, like Bench;
+    // a failed build is reported here and again by its consumers
+    SparkEntry.artifacts.filter(a => only.forall(_.exists(a.consumers))).foreach { a =>
+      try a.prebuild(spark, sfDir)
       catch { case e: Throwable =>
-        System.err.println(s"[verify] clusterLabels prebuild failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${a.name} prebuild failed: ${e.getMessage}")
       }
-    // reclaim localCheckpoint blocks pinned by iterative operators after
-    // each query — across 80 sequential queries the leak taxes every later
-    // job with GC pauses (see Bench.reclaimBlocks)
-    val protectedRdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    }
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -52,9 +26,8 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => protectedRdds(id) }
-        .values.foreach(_.unpersist(blocking = false))
+      // leaked operator blocks would tax every later job with GC pauses
+      Artifact.releaseUnowned(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -247,6 +247,12 @@ object Dedup {
     * diversity, not corpus size — replicated corpora (the common case at
     * scale: crawl snapshots, mirrored shards) cost what their distinct
     * content costs.
+    *
+    * Persisted blocks: the (id, simhash) signature table, cached
+    * MEMORY_AND_DISK since five subtrees of the plan read it. They outlive
+    * the call; release them with `spark.catalog.clearCache()` or
+    * [[graft.Artifact.releaseUnowned]]. The result stays valid after
+    * either: it recomputes the signatures from lineage.
     */
   def simhashPairs(df: DataFrame, textCol: String, idCol: String,
                    maxDist: Int = 3): DataFrame = {
@@ -259,14 +265,8 @@ object Dedup {
         "(exact-signature dedup is the within-group intra path)")
     val chunks = maxDist + 1
     val width = 64 / chunks
-    // the signature table feeds FIVE subtrees of this one plan (the
-    // identical-signature self-join's two sides, the distinct-signature
-    // enumeration, and the two expansion joins) — unpersisted, each
-    // consumer re-runs the corpus scan + tokenize + simhash (r17 plan
-    // audit: 5 tokenize passes per invocation). Persist the 16-byte
-    // (id, simhash) rows so the corpus tokenizes ONCE; Bench/Verify
-    // reclaim the blocks after each query, and long-lived callers fall
-    // under the library's standard persist-lifecycle note.
+    // persisted: FIVE subtrees read it (the identical-signature self-join's
+    // two sides, the distinct enumeration, the two expansion joins)
     val sig = simhash(df, textCol, idCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
@@ -321,13 +321,16 @@ object Dedup {
     * Scale shape: candidates exchange id-only tuples; the shingle arrays
     * join back per-candidate through two hash joins, so text-sized data
     * never rides the pair explosion.
+    *
+    * Persisted blocks: the (id, sorted shingle hashes) table, read by both
+    * sides of every candidate join, plus [[simhashPairs]]' signatures;
+    * released and recomputed like those.
     */
   def simhashVerifiedPairs(df: DataFrame, textCol: String, idCol: String,
                            maxDist: Int = 7, shingleK: Int = 3,
                            threshold: Double = 0.5): DataFrame = {
     // the shingle table joins into BOTH sides of every candidate pair —
-    // persist it so the corpus shingles once instead of once per side
-    // (same lifecycle note as simhashPairs' signature table)
+    // persisted so the corpus shingles once instead of once per side
     val sh = df.select(col(idCol).as("id"),
       graft.functions.ShingleHash.wordShingleHashes(col(textCol), shingleK,
         sorted = true).as("sh"))
@@ -697,7 +700,7 @@ object Dedup {
     * blocks (the converged labels). Long-lived sessions running many
     * components() calls should unpersist results when done — leaked blocks
     * surface as uniform GC drift across subsequent jobs (see
-    * Bench.reclaimBlocks).
+    * Artifact.releaseUnowned).
     */
   def components(pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
                  maxIters: Int = 20): DataFrame = {
@@ -833,7 +836,7 @@ object Dedup {
     * over (id, score) pairs — no text in any exchange, survivors resolve
     * with a single keyed anti-join. Like [[components]], the result is
     * backed by localCheckpoint blocks (the pinned doomed set); long-lived
-    * sessions should unpersist results when done (see Bench.reclaimBlocks).
+    * sessions should unpersist results when done (see Artifact.releaseUnowned).
     */
   def keepBest(df: DataFrame, pairs: DataFrame, idCol: String,
                scoreCol: String,

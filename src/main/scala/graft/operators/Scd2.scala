@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Slowly-changing-dimension type-2 history maintenance — the APPLY step of
   * incremental sync. [[Validators.snapshotDiff]] detects what changed
@@ -51,11 +52,28 @@ object Scd2 {
     */
   def merge(scd: DataFrame, snap: DataFrame, keys: Seq[String],
             compareCols: Seq[String], ts: String): DataFrame = {
+    require(keys.nonEmpty && compareCols.nonEmpty,
+      s"merge: keys and compareCols must each name a column, got $keys and $compareCols")
     val dataCols = keys ++ compareCols
     require(snap.columns.toSeq == dataCols,
       s"snapshot columns must be exactly keys ++ compareCols ($dataCols), got ${snap.columns.toSeq}")
     require(scd.columns.toSeq == dataCols ++ Seq("valid_from", "valid_to"),
       s"scd columns must be keys ++ compareCols ++ (valid_from, valid_to), got ${scd.columns.toSeq}")
+    // a data column named like a join-side rename or presence marker below
+    // would resolve against the wrong side (upsert's guard, widened)
+    val clash = dataCols.intersect(dataCols.map("__s_" + _) :+ "__s_present" :+ "__o_present")
+    require(clash.isEmpty, s"merge: column(s) ${clash.mkString(",")} collide with the " +
+      "reserved __s_<column>/__s_present/__o_present names; rename them first")
+    // null-safe equality (<=>) is undefined on maps, at any nesting depth
+    def hasMap(t: DataType): Boolean = t match {
+      case _: MapType => true
+      case s: StructType => s.fields.exists(f => hasMap(f.dataType))
+      case a: ArrayType => hasMap(a.elementType)
+      case _ => false
+    }
+    val mapCols = dataCols.filter(c => hasMap(snap.schema(c).dataType))
+    require(mapCols.isEmpty, s"merge: column(s) ${mapCols.mkString(",")} hold a map type, " +
+      "which has no null-safe equality; convert them (array_sort(map_entries(c))) first")
     val open = scd.filter(col("valid_to").isNull)
     val closed = scd.filter(col("valid_to").isNotNull)
     // the snapshot side is fully RENAMED before joining (both frames

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Artifact, Tables}
 import graft.operators.{DenseId, ForeignKey, VanCode}
 import graft.sinks.Sinks
 import graft.sources.Sources
@@ -23,36 +23,18 @@ object SourceQueries {
   // either direction breaks the hash.
   private val fwFields = Seq(("n_nationkey", 6), ("n_name", 26), ("n_regionkey", 4))
 
-  /** Round-trip queries write a temp artifact as INPUT for the read side.
-    * That write is an eager action, so memoize it per data dir (the content
-    * is a pure function of the dir) — one write per JVM instead of one per
-    * warmup/timed/sweep invocation, and no unbounded temp-disk growth.
-    * Each staging dir is removed by an exit-time recursive delete
-    * ([[graft.TempFiles.cleanupAtExit]]) so files written AFTER staging
-    * (Derby transaction logs) go too.
-    */
-  private val artifactCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
-  private[queries] def cachedArtifact(kind: String, dir: String)(write: String => Unit): String =
-    artifactCache.computeIfAbsent((kind, dir), { _ =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_$kind")
-      write(tmp.toString)
-      // a shutdown-hook recursive delete, not deleteOnExit: deleteOnExit
-      // only removes what existed at registration, and several artifacts
-      // keep writing afterwards (Derby transaction logs) — each
-      // short-lived Verify/Bench JVM then leaks its staging dirs
-      graft.TempFiles.cleanupAtExit(tmp)
-      tmp.toString
-    })
+  // Round-trip queries stage a write as INPUT for the read side. That
+  // write is an eager action and its content a pure function of the data
+  // dir, so each is a staged [[Artifact]]: one write per JVM instead of
+  // one per warmup/timed/sweep invocation.
+  private val fwIn = Artifact.staged("q21_fixed_width", "q21_fixed_width") { (spark, dir, out) =>
+    Sinks.writeFixedWidth(
+      Tables.nation(spark, dir).select("n_nationkey", "n_name", "n_regionkey"),
+      out, fwFields)
+  }
 
   private def q21FixedWidth(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = cachedArtifact("fw", dir) { out =>
-      Sinks.writeFixedWidth(
-        Tables.nation(spark, dir).select("n_nationkey", "n_name", "n_regionkey"),
-        out, fwFields)
-    }
-    Sources.readFixedWidth(spark, tmp, fwFields)
+    Sources.readFixedWidth(spark, fwIn(spark, dir), fwFields)
       .select(col("n_nationkey").cast(LongType).as("n_nationkey"),
         col("n_name"),
         col("n_regionkey").cast(LongType).as("n_regionkey"))
@@ -247,13 +229,14 @@ object SourceQueries {
   // a workbook, read it back through the Excel source, re-type the numeric
   // columns; the oracle reads the original parquet. Any cell-encoding,
   // escaping, shared/inline-string or column-alignment bug breaks the hash.
+  private val xlsxIn = Artifact.staged("q23_excel", "q23_excel") { (spark, dir, out) =>
+    Sinks.writeExcel(
+      Tables.documents(spark, dir).select("doc_id", "text", "lang", "n_chars"),
+      java.nio.file.Paths.get(out).resolve("documents.xlsx").toString)
+  }
+
   private def q23Excel(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = cachedArtifact("xlsx", dir) { out =>
-      Sinks.writeExcel(
-        Tables.documents(spark, dir).select("doc_id", "text", "lang", "n_chars"),
-        java.nio.file.Paths.get(out).resolve("documents.xlsx").toString)
-    }
-    Sources.readExcel(spark, tmp)
+    Sources.readExcel(spark, xlsxIn(spark, dir))
       .select(col("doc_id").cast(LongType).as("doc_id"),
         col("text"), col("lang"),
         col("n_chars").cast(LongType).as("n_chars"))
@@ -329,20 +312,29 @@ object SourceQueries {
   // s_suppkey), and projected; the oracle reads the original parquet. Any
   // type-mapping loss (BIGINT/INT/DOUBLE/VARCHAR) in either direction
   // breaks the hash.
-  private def q41Jdbc(spark: SparkSession, dir: String): DataFrame = {
-    val props = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
-    val db = cachedArtifact("derby", dir) { out =>
-      Sinks.writeJdbc(
-        Tables.supplier(spark, dir)
-          .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal"),
-        s"jdbc:derby:$out/db;create=true", "supplier_rt", props,
-        mode = org.apache.spark.sql.SaveMode.Overwrite)
+  private val derbyProps = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
+
+  private val supplierCols = Seq("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
+
+  private def supplierBase(spark: SparkSession, dir: String): DataFrame =
+    Tables.supplier(spark, dir).select(supplierCols.map(col): _*)
+
+  /** A Derby database at `<staging dir>/db` seeded with `rows` as `table`. */
+  private def derbyStage(name: String, table: String)(
+      rows: (SparkSession, String) => DataFrame): Artifact[String] =
+    Artifact.staged(name, name) { (spark, dir, out) =>
+      Sinks.writeJdbc(rows(spark, dir), s"jdbc:derby:$out/db;create=true", table,
+        derbyProps, mode = org.apache.spark.sql.SaveMode.Overwrite)
     }
-    Sources.readJdbc(spark, s"jdbc:derby:$db/db", "supplier_rt", props,
+
+  private val derbyRt = derbyStage("q41_jdbc", "supplier_rt")(supplierBase)
+
+  private def q41Jdbc(spark: SparkSession, dir: String): DataFrame = {
+    val db = derbyRt(spark, dir)
+    Sources.readJdbc(spark, s"jdbc:derby:$db/db", "supplier_rt", derbyProps,
         partitionColumn = Some("s_suppkey"), lowerBound = 1L,
         upperBound = 10000L, numPartitions = 4)
-      .select(col("s_suppkey"), col("s_name"), col("s_nationkey"),
-        col("s_acctbal"))
+      .select(supplierCols.map(col): _*)
   }
 
   private val q41JdbcSql =
@@ -361,24 +353,20 @@ object SourceQueries {
   // lost INSERT-on-zero-update, a type-mapping loss, or a non-idempotent
   // re-application (the cached DB is upserted again on every invocation)
   // breaks the hash.
+  private val derbyUps = derbyStage("q49_jdbc_upsert", "supplier_ups")(supplierBase)
+
   private def q49JdbcUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val props = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
-    val base = Tables.supplier(spark, dir)
-      .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-    val db = cachedArtifact("derbyups", dir) { out =>
-      Sinks.writeJdbc(base, s"jdbc:derby:$out/db;create=true", "supplier_ups",
-        props, mode = org.apache.spark.sql.SaveMode.Overwrite)
-    }
+    val base = supplierBase(spark, dir)
+    val db = derbyUps(spark, dir)
     val changed = base.filter(col("s_suppkey") % 10 === 0)
       .withColumn("s_acctbal", col("s_acctbal") + 100.0)
       .withColumn("s_name", lower(col("s_name")))
     val fresh = base.filter(col("s_suppkey") % 7 === 0)
       .withColumn("s_suppkey", col("s_suppkey") + lit(10000000000L))
     Sinks.writeJdbcUpsert(changed.unionByName(fresh), s"jdbc:derby:$db/db",
-      "supplier_ups", Seq("s_suppkey"), props)
-    Sources.readJdbc(spark, s"jdbc:derby:$db/db", "supplier_ups", props)
-      .select(col("s_suppkey"), col("s_name"), col("s_nationkey"),
-        col("s_acctbal"))
+      "supplier_ups", Seq("s_suppkey"), derbyProps)
+    Sources.readJdbc(spark, s"jdbc:derby:$db/db", "supplier_ups", derbyProps)
+      .select(supplierCols.map(col): _*)
   }
 
   private val q49JdbcUpsertSql =
@@ -403,14 +391,11 @@ object SourceQueries {
   // key, a tombstone row leaking into the upsert half, or a
   // non-idempotent re-application (the cached DB re-applies the batch on
   // every invocation) breaks the hash.
+  private val derbyCdc = derbyStage("q52_cdc_apply", "supplier_cdc")(supplierBase)
+
   private def q52CdcApply(spark: SparkSession, dir: String): DataFrame = {
-    val props = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
-    val base = Tables.supplier(spark, dir)
-      .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-    val db = cachedArtifact("derbycdc", dir) { out =>
-      Sinks.writeJdbc(base, s"jdbc:derby:$out/db;create=true", "supplier_cdc",
-        props, mode = org.apache.spark.sql.SaveMode.Overwrite)
-    }
+    val base = supplierBase(spark, dir)
+    val db = derbyCdc(spark, dir)
     val changed = base
       .filter(col("s_suppkey") % 10 === 0 && col("s_suppkey") % 13 =!= 0)
       .withColumn("s_acctbal", col("s_acctbal") + 100.0)
@@ -422,10 +407,9 @@ object SourceQueries {
       .unionByName(fresh.withColumn("__op", lit("U")))
       .unionByName(dels.withColumn("__op", lit("D")))
     Sinks.writeJdbcCdc(batch, s"jdbc:derby:$db/db", "supplier_cdc",
-      Seq("s_suppkey"), "__op", "D", props)
-    Sources.readJdbc(spark, s"jdbc:derby:$db/db", "supplier_cdc", props)
-      .select(col("s_suppkey"), col("s_name"), col("s_nationkey"),
-        col("s_acctbal"))
+      Seq("s_suppkey"), "__op", "D", derbyProps)
+    Sources.readJdbc(spark, s"jdbc:derby:$db/db", "supplier_cdc", derbyProps)
+      .select(supplierCols.map(col): _*)
   }
 
   private val q52CdcApplySql =
@@ -452,26 +436,27 @@ object SourceQueries {
   // dirs per invocation, so re-runs are self-contained and deterministic.
   // The oracle replays latest-version-per-key in SQL — a lost update, a
   // winner tie-break drift, or a non-atomic publish breaks the hash.
-  private def sCdcApply(spark: SparkSession, dir: String): DataFrame = {
+  private val cdcIn = Artifact.staged("s_cdc_apply", "s_cdc_apply") { (spark, dir, out) =>
     val base = Tables.orders(spark, dir)
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
-    val in = cachedArtifact("scdcin", dir) { out =>
-      base.withColumn("seq", lit(1L))
-        .write.mode("overwrite").parquet(out)
-      base.filter(col("o_orderkey") % 10 === 0)
-        .withColumn("o_orderpriority", lower(col("o_orderpriority")))
-        .withColumn("o_totalprice", col("o_totalprice") + 5.0)
-        .withColumn("seq", lit(2L))
-        .write.mode("append").parquet(out)
-      base.filter(col("o_orderkey") % 7 === 0)
-        .withColumn("o_orderkey", col("o_orderkey") + lit(10000000000L))
-        .withColumn("seq", lit(1L))
-        .write.mode("append").parquet(out)
-    }
-    val outDir = java.nio.file.Files.createTempDirectory("scdcout").toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("scdcckpt").toString
-    val stream = spark.readStream
-      .schema(spark.read.parquet(in).schema).parquet(in)
+    base.withColumn("seq", lit(1L))
+      .write.mode("overwrite").parquet(out)
+    base.filter(col("o_orderkey") % 10 === 0)
+      .withColumn("o_orderpriority", lower(col("o_orderpriority")))
+      .withColumn("o_totalprice", col("o_totalprice") + 5.0)
+      .withColumn("seq", lit(2L))
+      .write.mode("append").parquet(out)
+    base.filter(col("o_orderkey") % 7 === 0)
+      .withColumn("o_orderkey", col("o_orderkey") + lit(10000000000L))
+      .withColumn("seq", lit(1L))
+      .write.mode("append").parquet(out)
+  }
+
+  private def sCdcApply(spark: SparkSession, dir: String): DataFrame = {
+    val in = cdcIn(spark, dir)
+    val outDir = graft.TempFiles.dir("scdcout") + "/t"
+    val ckpt = graft.TempFiles.dir("scdcckpt")
+    val stream = graft.streaming.Streams.parquetStream(spark, in)
     val q = graft.streaming.Streams.toUpsertSink(stream, outDir, ckpt,
       keys = Seq("o_orderkey"), seqCol = "seq")
     q.processAllAvailable(); q.stop()
@@ -502,13 +487,14 @@ object SourceQueries {
   // constants (Corpus.shuffleKeySql) — a drifted shard route, a
   // partition-column type loss, or a nondeterministic position breaks
   // the hash.
+  private val shards = Artifact.staged("d_shard_export", "d_shard_export") { (spark, dir, out) =>
+    Sinks.writeShuffledShards(
+      Tables.documents(spark, dir).select("doc_id"), out, "doc_id",
+      seed = 11L, nShards = 4)
+  }
+
   private def dShardExport(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = cachedArtifact("shards", dir) { out =>
-      Sinks.writeShuffledShards(
-        Tables.documents(spark, dir).select("doc_id"), out, "doc_id",
-        seed = 11L, nShards = 4)
-    }
-    spark.read.parquet(tmp)
+    spark.read.parquet(shards(spark, dir))
       .select(col("doc_id"), col("pos"),
         col("shard").cast(org.apache.spark.sql.types.LongType).as("shard"))
   }
@@ -529,20 +515,17 @@ object SourceQueries {
   // writeJdbcIfAbsent. Present evens keep their ORIGINAL names (a lost
   // skip shows as a lower-cased even); absent odds insert lower-cased.
   // Re-applied every invocation — idempotence inside the gate, like q49.
+  private val derbyIa = derbyStage("q51_jdbc_if_absent", "supplier_ia") {
+    (spark, dir) => supplierBase(spark, dir).filter(col("s_suppkey") % 2 === 0)
+  }
+
   private def q51JdbcIfAbsent(spark: SparkSession, dir: String): DataFrame = {
-    val props = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
-    val base = Tables.supplier(spark, dir)
-      .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-    val db = cachedArtifact("derbyia", dir) { out =>
-      Sinks.writeJdbc(base.filter(col("s_suppkey") % 2 === 0),
-        s"jdbc:derby:$out/db;create=true", "supplier_ia", props,
-        mode = org.apache.spark.sql.SaveMode.Overwrite)
-    }
+    val base = supplierBase(spark, dir)
+    val db = derbyIa(spark, dir)
     Sinks.writeJdbcIfAbsent(base.withColumn("s_name", lower(col("s_name"))),
-      s"jdbc:derby:$db/db", "supplier_ia", Seq("s_suppkey"), props)
-    Sources.readJdbc(spark, s"jdbc:derby:$db/db", "supplier_ia", props)
-      .select(col("s_suppkey"), col("s_name"), col("s_nationkey"),
-        col("s_acctbal"))
+      s"jdbc:derby:$db/db", "supplier_ia", Seq("s_suppkey"), derbyProps)
+    Sources.readJdbc(spark, s"jdbc:derby:$db/db", "supplier_ia", derbyProps)
+      .select(supplierCols.map(col): _*)
   }
 
   private val q51JdbcIfAbsentSql =
@@ -571,15 +554,17 @@ object SourceQueries {
       |  </elem></seq>
       |</dfasdl>""".stripMargin
 
-  private def q50DfasdlTokens(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.Dfasdl
-    val tmp = cachedArtifact("tokstream", dir) { out =>
+  private val tokensIn = Artifact.staged("q50_dfasdl_tokens", "q50_dfasdl_tokens") {
+    (spark, dir, out) =>
       Tables.orders(spark, dir)
         .select(concat(lit("KEY:"), col("o_orderkey"),
           lit("\nPRI:"), col("o_orderpriority")).as("value"))
         .write.mode("overwrite").text(s"$out/data")
-    }
-    Dfasdl.readDelimited(spark, s"$tmp/data", Dfasdl.parseSchema(q50Doc))
+  }
+
+  private def q50DfasdlTokens(spark: SparkSession, dir: String): DataFrame = {
+    import graft.sources.Dfasdl
+    Dfasdl.readDelimited(spark, s"${tokensIn(spark, dir)}/data", Dfasdl.parseSchema(q50Doc))
   }
 
   private val q50DfasdlTokensSql =
@@ -596,9 +581,8 @@ object SourceQueries {
   // combination-alternation reader handles. The oracle replays the
   // dispatch with CASE over the original parquet; a mis-framed record, a
   // wrong branch pick, or a type-coercion miss breaks the hash.
-  private def q53DfasdlMixed(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.Dfasdl
-    val tmp = cachedArtifact("dfasdlmixed", dir) { out =>
+  private val mixedIn = Artifact.staged("q53_dfasdl_mixed", "q53_dfasdl_mixed") {
+    (spark, dir, out) =>
       Tables.orders(spark, dir)
         .select(concat(
           col("o_orderkey"), lit(";"),
@@ -607,7 +591,10 @@ object SourceQueries {
             .otherwise(col("o_custkey").cast(StringType)),
           lit(";"), col("o_orderstatus")).as("value"))
         .write.mode("overwrite").text(s"$out/data")
-    }
+  }
+
+  private def q53DfasdlMixed(spark: SparkSession, dir: String): DataFrame = {
+    import graft.sources.Dfasdl
     val doc = Dfasdl.parseSchema(
       """<dfasdl xmlns="http://www.dfasdl.org/DFASDL" id="MIXEDCHOICE">
         |  <seq id="s"><elem id="r">
@@ -622,7 +609,7 @@ object SourceQueries {
         |    <str id="status"/>
         |  </elem></seq>
         |</dfasdl>""".stripMargin)
-    Dfasdl.readDelimited(spark, s"$tmp/data", doc)
+    Dfasdl.readDelimited(spark, s"${mixedIn(spark, dir)}/data", doc)
   }
 
   private val q53DfasdlMixedSql =
@@ -642,12 +629,13 @@ object SourceQueries {
   // original parquet — any drift in schema emission, document parsing, CSV
   // typing (num→long, formatnum→double), or transformer compilation breaks
   // the hash.
+  private val customerCsv = Artifact.staged("q42_dfasdl", "q42_dfasdl") { (spark, dir, out) =>
+    Sinks.writeCsv(Tables.customer(spark, dir)
+      .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment"), out)
+  }
+
   private def q42Dfasdl(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Dfasdl
-    val cols = Seq("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
-    val tmp = cachedArtifact("dfasdlcsv", dir) { out =>
-      Sinks.writeCsv(Tables.customer(spark, dir).select(cols.map(col): _*), out)
-    }
     val schemaDoc = Dfasdl
       .emit(StructType(Seq(
         StructField("c_custkey", LongType), StructField("c_name", StringType),
@@ -679,7 +667,7 @@ object SourceQueries {
          |  </recipe>
          |</cookbook>""".stripMargin)
     Dfasdl.applyCookbook(
-      Dfasdl.readDelimited(spark, tmp, cookbook.source), cookbook)
+      Dfasdl.readDelimited(spark, customerCsv(spark, dir), cookbook.source), cookbook)
   }
 
   private val q42DfasdlSql =
@@ -696,15 +684,17 @@ object SourceQueries {
   // xml-attribute-name/xml-attribute-parent. The oracle reads the original
   // parquet — any drift in rowTag derivation, element naming, attribute
   // extraction, or the num/formatnum coercions breaks the hash.
-  private def q43DfasdlXml(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.Dfasdl
-    val tmp = cachedArtifact("dfasdlxml", dir) { out =>
+  private val customerXml = Artifact.staged("q43_dfasdl_xml", "q43_dfasdl_xml") {
+    (spark, dir, out) =>
       Sinks.writeXml(
         Tables.customer(spark, dir).select(
           col("c_custkey"), col("c_name"), col("c_acctbal"),
           col("c_mktsegment").as("_segment")),
         out, rowTag = "customer", rootTag = "customers")
-    }
+  }
+
+  private def q43DfasdlXml(spark: SparkSession, dir: String): DataFrame = {
+    import graft.sources.Dfasdl
     val doc = Dfasdl.parseSchema(
       """<dfasdl xmlns="http://www.dfasdl.org/DFASDL" id="CUSTXML" semantic="niem">
         |  <seq id="customers">
@@ -716,7 +706,7 @@ object SourceQueries {
         |    </elem>
         |  </seq>
         |</dfasdl>""".stripMargin)
-    Dfasdl.readXml(spark, tmp, doc)
+    Dfasdl.readXml(spark, customerXml(spark, dir), doc)
   }
 
   private val q43DfasdlXmlSql =
@@ -729,15 +719,17 @@ object SourceQueries {
   // Lines under renamed keys, the DFASDL maps them back through
   // json-attribute-name, and the date/num/formatnum coercions re-type the
   // stringly read. Oracle reads the original parquet.
-  private def q44DfasdlJson(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.Dfasdl
-    val tmp = cachedArtifact("dfasdljson", dir) { out =>
+  private val ordersJson = Artifact.staged("q44_dfasdl_json", "q44_dfasdl_json") {
+    (spark, dir, out) =>
       Sinks.writeJson(
         Tables.orders(spark, dir).select(
           col("o_orderkey").as("key"), col("o_orderdate").as("odate"),
           col("o_totalprice").as("total"), col("o_orderpriority").as("prio")),
         out)
-    }
+  }
+
+  private def q44DfasdlJson(spark: SparkSession, dir: String): DataFrame = {
+    import graft.sources.Dfasdl
     val doc = Dfasdl.parseSchema(
       """<dfasdl xmlns="http://www.dfasdl.org/DFASDL" id="ORDERSJSON" semantic="niem">
         |  <seq id="orders">
@@ -749,7 +741,7 @@ object SourceQueries {
         |    </elem>
         |  </seq>
         |</dfasdl>""".stripMargin)
-    Dfasdl.readJson(spark, tmp, doc)
+    Dfasdl.readJson(spark, ordersJson(spark, dir), doc)
   }
 
   private val q44DfasdlJsonSql =
@@ -764,9 +756,7 @@ object SourceQueries {
   // Dfasdl.writeDelimited, and the SAME document reads it back — a full
   // write→read round-trip whose oracle is the original parquet. Any
   // asymmetry between render() and convert() breaks the hash.
-  private def q45DfasdlWrite(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.Dfasdl
-    val doc = Dfasdl.parseSchema(
+  private def q45Doc = graft.sources.Dfasdl.parseSchema(
       """<dfasdl xmlns="http://www.dfasdl.org/DFASDL" id="ORDERSOUT" semantic="niem">
         |  <str id="header"/>
         |  <seq id="orders">
@@ -778,16 +768,19 @@ object SourceQueries {
         |    </elem>
         |  </seq>
         |</dfasdl>""".stripMargin)
-    val tmp = cachedArtifact("dfasdlout", dir) { out =>
-      Dfasdl.writeDelimited(
+
+  private val ordersDelimited = Artifact.staged("q45_dfasdl_write", "q45_dfasdl_write") {
+    (spark, dir, out) =>
+      graft.sources.Dfasdl.writeDelimited(
         Tables.orders(spark, dir).select(
           col("o_orderkey").as("orderkey"), col("o_orderdate").as("orderdate"),
           col("o_totalprice").as("totalprice"),
           col("o_orderpriority").as("priority")),
-        doc, out)
-    }
-    Dfasdl.readDelimited(spark, tmp, doc)
+        q45Doc, out)
   }
+
+  private def q45DfasdlWrite(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.Dfasdl.readDelimited(spark, ordersDelimited(spark, dir), q45Doc)
 
   private val q45DfasdlWriteSql =
     """SELECT o_orderkey AS orderkey, o_orderdate AS orderdate,
@@ -803,9 +796,8 @@ object SourceQueries {
   // CSV/choice-02 fixture shape). The oracle replays the dispatch with
   // CASE over the original parquet — a wrong branch pick, a flattened
   // (pre-r8) parse, or a typing drift breaks the hash.
-  private def q46DfasdlChoice(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.Dfasdl
-    val tmp = cachedArtifact("dfasdlchoice", dir) { out =>
+  private val choiceCsv = Artifact.staged("q46_dfasdl_choice", "q46_dfasdl_choice") {
+    (spark, dir, out) =>
       Sinks.writeCsv(
         Tables.orders(spark, dir).select(
           col("o_orderkey").as("okey"),
@@ -813,7 +805,10 @@ object SourceQueries {
             (col("o_orderkey") * 2).cast(StringType))
             .otherwise(col("o_orderpriority")).as("v")),
         out, delimiter = ";")
-    }
+  }
+
+  private def q46DfasdlChoice(spark: SparkSession, dir: String): DataFrame = {
+    import graft.sources.Dfasdl
     val doc = Dfasdl.parseSchema(
       """<dfasdl xmlns="http://www.dfasdl.org/DFASDL" id="ORDERSCHOICE" semantic="niem">
         |  <str id="header"/>
@@ -827,7 +822,7 @@ object SourceQueries {
         |    </elem>
         |  </seq>
         |</dfasdl>""".stripMargin)
-    Dfasdl.readDelimited(spark, tmp, doc)
+    Dfasdl.readDelimited(spark, choiceCsv(spark, dir), doc)
   }
 
   private val q46DfasdlChoiceSql =
@@ -847,9 +842,8 @@ object SourceQueries {
   // the digits (FileParserFunctions.scala:286 group(1) semantics). The
   // oracle replays dispatch AND extraction with CASE + regexp_extract —
   // a wrong branch, a lost trim, or a formatstr drift breaks the hash.
-  private def q48DfasdlLines(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.Dfasdl
-    val tmp = cachedArtifact("dfasdllines", dir) { out =>
+  private val linesIn = Artifact.staged("q48_dfasdl_lines", "q48_dfasdl_lines") {
+    (spark, dir, out) =>
       Tables.orders(spark, dir).select(
         when(col("o_orderkey") % 3 === 1,
           concat(lit("ORDER: "), (col("o_orderkey") * 2).cast(StringType)))
@@ -859,7 +853,10 @@ object SourceQueries {
           .otherwise(concat(lit("REF: R"), col("o_orderkey").cast(StringType),
             lit("x"))).as("value"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).text(out)
-    }
+  }
+
+  private def q48DfasdlLines(spark: SparkSession, dir: String): DataFrame = {
+    import graft.sources.Dfasdl
     val doc = Dfasdl.parseSchema(
       """<dfasdl xmlns="http://www.dfasdl.org/DFASDL" id="ORDERLINES" semantic="niem">
         |  <seq id="lines">
@@ -879,7 +876,7 @@ object SourceQueries {
         |    </choice>
         |  </seq>
         |</dfasdl>""".stripMargin)
-    Dfasdl.readDelimited(spark, tmp, doc)
+    Dfasdl.readDelimited(spark, linesIn(spark, dir), doc)
   }
 
   private val q48DfasdlLinesSql =
@@ -903,17 +900,16 @@ object SourceQueries {
   // original parquet — any drift in the schema mapping, logical-type
   // encode/decode, or a split duplicating/dropping a block row breaks
   // rows+hash.
-  private def q47Avro(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.Avro
-    val tmp = cachedArtifact("avro", dir) { out =>
-      Avro.writeAvro(
-        Tables.orders(spark, dir).select(
-          col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-          col("o_orderdate"), col("o_orderpriority")),
-        out, codec = "snappy")
-    }
-    Avro.readAvro(spark, tmp, maxSplitBytes = 64 * 1024)
+  private val ordersAvro = Artifact.staged("q47_avro", "q47_avro") { (spark, dir, out) =>
+    graft.sources.Avro.writeAvro(
+      Tables.orders(spark, dir).select(
+        col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
+        col("o_orderdate"), col("o_orderpriority")),
+      out, codec = "snappy")
   }
+
+  private def q47Avro(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.Avro.readAvro(spark, ordersAvro(spark, dir), maxSplitBytes = 64 * 1024)
 
   private val q47AvroSql =
     """SELECT o_orderkey, o_custkey, o_totalprice, o_orderdate,

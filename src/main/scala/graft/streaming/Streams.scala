@@ -28,6 +28,11 @@ object Streams {
     StructField("props", StringType)
   ))
 
+  /** A file stream over the parquet files in `dir`, read with the schema
+    * a batch read of `dir` infers. */
+  def parquetStream(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir)
+
   /** File-based event stream over a directory of parquet drops — the
     * streaming twin of Tables.events.
     *

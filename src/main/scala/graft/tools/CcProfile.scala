@@ -16,9 +16,7 @@ import org.apache.spark.sql.functions._
 object CcProfile {
   def main(args: Array[String]): Unit = {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get(GraftSession.envCores(32))
 
     def time[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime()

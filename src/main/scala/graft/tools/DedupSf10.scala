@@ -50,9 +50,7 @@ object DedupSf10 {
   def main(args: Array[String]): Unit = {
     val src = args.lift(0).getOrElse("target/sf10")
     val out = args.lift(1).getOrElse("/tmp/dedup_sf10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get(GraftSession.envCores(32))
     run(spark, src, out)
     spark.stop()
   }

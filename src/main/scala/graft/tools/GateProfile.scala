@@ -18,9 +18,7 @@ import org.apache.spark.sql.functions._
 object GateProfile {
   def main(args: Array[String]): Unit = {
     val src = args.lift(0).getOrElse("target/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get(GraftSession.envCores(32))
     val docs = graft.Tables.documents(spark, src)
       .localCheckpoint() // isolate gate compute from the parquet scan
     val n = docs.count()

@@ -6,31 +6,51 @@ import org.apache.spark.sql.SparkSession
   * time N runs — the `.explain`-and-iterate loop SURVEY §5 prescribes.
   *
   * Usage: runMain graft.tools.PlanProbe <queryName> [sfDir] [runs] [--plan]
-  *          [--set spark.conf.key=value ...]
+  *          [--stages] [--final] [--set spark.conf.key=value ...]
   *
   * `--set k=v` applies runtime SQL confs before running — the A-B lever
   * for config experiments (e.g. AQE coalescing modes) without recompiling.
   */
 object PlanProbe {
-  def main(args: Array[String]): Unit = {
-    // flags are position-independent: "--plan" must not be consumed as a
-    // positional (q1 dir --plan previously died in runs.toInt)
-    val positional = args.filterNot(_.startsWith("--"))
-    val name = positional.headOption.getOrElse("q1_agg")
-    val sfDir = positional.lift(1).getOrElse("/root/testdata/sf0.1")
-    val runs = positional.lift(2).map(_.toInt).getOrElse(3)
-    val showPlan = args.contains("--plan")
-    val sets = args.filter(_.startsWith("--set")).map(_.stripPrefix("--set"))
-      .filter(_.nonEmpty) ++
-      args.sliding(2).collect { case Array("--set", kv) => kv }
+  final case class Args(name: String, sfDir: String, runs: Int,
+                        flags: Set[String], sets: Seq[(String, String)])
+
+  private val knownFlags = Set("--plan", "--stages", "--final")
+
+  /** Parses `args` without side effects: flags are position-independent,
+    * and `--set k=v` / `--set=k=v` pairs never count as positionals. */
+  def parseArgs(args: Seq[String]): Args = {
+    def bad(msg: String) = throw new IllegalArgumentException(msg)
+    def conf(kv: String): (String, String) = kv.split("=", 2) match {
+      case Array(k, v) if k.trim.nonEmpty => k.trim -> v
+      case _ => bad(s"--set expects key=value with a non-empty key, got '$kv'")
+    }
+    val positional = Seq.newBuilder[String]
+    val flags = Set.newBuilder[String]
+    val sets = Seq.newBuilder[(String, String)]
+    val it = args.iterator
+    while (it.hasNext) it.next() match {
+      case "--set" => sets += conf(if (it.hasNext) it.next() else bad("--set needs key=value"))
+      case a if a.startsWith("--set=") => sets += conf(a.stripPrefix("--set="))
+      case a if knownFlags(a) => flags += a
+      case a if a.startsWith("--") => bad(s"unknown flag $a (known: ${knownFlags.mkString(", ")})")
+      case a => positional += a
+    }
+    val pos = positional.result()
+    if (pos.size > 3) bad(s"at most 3 positionals (query, sfDir, runs), got ${pos.mkString(" ")}")
+    Args(pos.headOption.getOrElse("q1_agg"), pos.lift(1).getOrElse("/root/testdata/sf0.1"),
+      pos.lift(2).fold(3)(r => r.toIntOption.getOrElse(bad(s"runs must be an integer, got '$r'"))),
+      flags.result(), sets.result())
+  }
+
+  def main(argv: Array[String]): Unit = {
+    val Args(name, sfDir, runs, flags, sets) = parseArgs(argv.toSeq)
     // static (core) confs only take effect at context construction —
     // stage them as system properties (SparkConf loads spark.* props),
     // then ALSO set runtime-settable SQL confs on the live session
-    sets.map(_.split("=", 2)).collect { case Array(k, v) =>
-      System.setProperty(k, v)
-    }
+    sets.foreach { case (k, v) => System.setProperty(k, v) }
     val spark = graft.GraftSession.get()
-    sets.map(_.split("=", 2)).collect { case Array(k, v) =>
+    sets.foreach { case (k, v) =>
       println(s"[probe] conf $k=$v")
       try spark.conf.set(k, v)
       catch { case _: org.apache.spark.sql.AnalysisException =>
@@ -41,7 +61,7 @@ object PlanProbe {
       val fn = graft.SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query '$name'; valid names: " +
           graft.SparkEntry.queries.keys.toSeq.sorted.mkString(", ")))
-      if (showPlan) fn(spark, sfDir).explain("formatted")
+      if (flags("--plan")) fn(spark, sfDir).explain("formatted")
       // aggregate task metrics per run: input bytes ≈ how often the source
       // files were really scanned (runtime exchange/stage reuse is
       // invisible in the initial plan), shuffle bytes = exchange volume,
@@ -52,7 +72,7 @@ object PlanProbe {
       val nTasks = new java.util.concurrent.atomic.AtomicLong
       // per-stage attribution (--stages): stage id → (tasks, task-ms) so a
       // ballooning stage is nameable instead of guessed at
-      val showStages = args.contains("--stages")
+      val showStages = flags("--stages")
       val stageAgg = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
       val stageName = new java.util.concurrent.ConcurrentHashMap[Int, String]()
       spark.sparkContext.addSparkListener(
@@ -92,7 +112,7 @@ object PlanProbe {
         // --final: the executed (post-AQE) operator skeleton — join
         // strategies and exchange counts as they actually RAN, which the
         // initial --plan cannot show
-        if (args.contains("--final") && i == runs) {
+        if (flags("--final") && i == runs) {
           val df = fn(spark, sfDir); df.count()
           val skeleton = df.queryExecution.executedPlan.toString.linesIterator
             .map(_.replaceAll("\\[.*", "").replaceAll("\\(\\d+\\)", ""))

@@ -39,9 +39,7 @@ object ScaleUp {
     val dst = args.lift(1).getOrElse("target/sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val docFactor = args.lift(3).map(_.toInt).getOrElse(factor)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get(GraftSession.envCores(8))
     run(spark, src, dst, factor, docFactor)
     spark.stop()
   }

@@ -30,9 +30,7 @@ object StreamScale {
   def main(args: Array[String]): Unit = {
     val src = args.lift(0).getOrElse("target/sf1")
     val nBatches = args.lift(1).map(_.toInt).getOrElse(16)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get(GraftSession.envCores(32))
     run(spark, src, nBatches)
     spark.stop()
   }

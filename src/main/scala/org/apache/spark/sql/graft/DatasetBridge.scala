@@ -22,4 +22,11 @@ object DatasetBridge {
 
   def logicalPlan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[Dataset[_]].logicalPlan
+
+  /** The block RDD of `ds`'s entry in its session's cache manager, when
+    * `ds` is cached (`persist`). */
+  def cachedBlocks(ds: org.apache.spark.sql.Dataset[_]): Option[org.apache.spark.rdd.RDD[_]] =
+    ds.sparkSession.asInstanceOf[SparkSession].sharedState.cacheManager
+      .lookupCachedData(ds.asInstanceOf[Dataset[_]])
+      .map(_.cachedRepresentation.cacheBuilder.cachedColumnBuffers)
 }

@@ -114,6 +114,36 @@ class ValidatorsSpec extends AnyFunSuite {
     ), rows.toString)
   }
 
+  test("scd2 merge rejects data columns named like its reserved rename and marker columns") {
+    import graft.operators.Scd2
+    for (bad <- Seq("__s_k", "__s_present", "__o_present")) {
+      val snap = Seq((1L, "x")).toDF("k", bad)
+      val e = intercept[IllegalArgumentException](
+        Scd2.merge(Scd2.init(snap, "d1"), snap, Seq("k"), Seq(bad), "d2"))
+      assert(e.getMessage.contains(bad), e.getMessage)
+    }
+  }
+
+  test("scd2 merge rejects empty key and compare column lists") {
+    import graft.operators.Scd2
+    val kv = Seq((1L, "x")).toDF("k", "v")
+    val noKeys = intercept[IllegalArgumentException](
+      Scd2.merge(Scd2.init(kv, "d1"), kv, Seq(), Seq("k", "v"), "d2"))
+    assert(noKeys.getMessage.contains("keys"), noKeys.getMessage)
+    val k = Seq(1L).toDF("k")
+    val noCompare = intercept[IllegalArgumentException](
+      Scd2.merge(Scd2.init(k, "d1"), k, Seq("k"), Seq(), "d2"))
+    assert(noCompare.getMessage.contains("compareCols"), noCompare.getMessage)
+  }
+
+  test("scd2 merge rejects a map-typed compare column by name") {
+    import graft.operators.Scd2
+    val snap = Seq((1L, Map("a" -> 1)), (2L, Map("b" -> 2))).toDF("k", "attrs")
+    val e = intercept[IllegalArgumentException](
+      Scd2.merge(Scd2.init(snap, "d1"), snap, Seq("k"), Seq("attrs"), "d2"))
+    assert(e.getMessage.contains("attrs") && e.getMessage.contains("map"), e.getMessage)
+  }
+
   test("upsert overwrites matched keys, inserts new ones, passes the rest through") {
     import spark.implicits._
     import graft.operators.Scd2
